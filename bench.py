@@ -68,7 +68,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from nntsc_spark.pipeline.dedup import reset_scratch
+from nntsc_spark.scratch import reset_scratch
 from nntsc_spark.plans import queries as _q
 from nntsc_spark.session import get_spark
 

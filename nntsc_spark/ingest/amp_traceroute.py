@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.scalars import extract_paths_columns
+from ..scratch import scratch_persist
 from .amp_icmp import icmp_stream_props
 from .base import truthy
 from .streams import upsert_dimension
@@ -93,7 +94,7 @@ def process_traceroute_ip(
     # not once per consumer.  Micro-batches are bounded, so MEMORY_AND_DISK
     # holds at any input scale.
     ip_results, _ = split_ip_as(raw)
-    ip_results = ip_results.persist()
+    ip_results = scratch_persist(ip_results)
     paths_dim = intern_paths(ip_results, paths_dim)
     aspaths_dim = intern_aspaths(ip_results, aspaths_dim)
     fact = (
@@ -150,7 +151,7 @@ def process_astraceroute(
     )
     # Parsed batch fans out to the dictionary upsert (broadcast side) and
     # two aggregations — persist so the hop decomposition runs once.
-    as_results = as_results.persist()
+    as_results = scratch_persist(as_results)
     aspaths_dim = intern_aspaths(as_results, aspaths_dim)
     with_ids = as_results.join(
         F.broadcast(aspaths_dim.select("aspath_id", "aspath")), ["aspath"], "left"

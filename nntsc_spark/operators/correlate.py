@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window  # noqa: F401 (lag windows)
 from pyspark.sql import functions as F
 
+from ..scratch import scratch_persist
+
 
 def _corr4(a: str, b: str) -> F.Column:
     """round-4 Pearson sample correlation, NULL on zero variance.
@@ -135,8 +137,6 @@ def stream_correlation(
     # decide-on-small-rows shape the optimization guide §8 prescribes;
     # scratch_persist keeps it LRU-bounded (guide §5: persist only reused
     # intermediates, with an unpersist story).
-    from ..pipeline.dedup import scratch_persist
-
     binned = scratch_persist(
         binned.select(F.col(key), F.col(bin_col), F.col(value_col))
     )

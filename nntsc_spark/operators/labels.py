@@ -48,23 +48,8 @@ def apply_labels(fact: DataFrame, label_map: DataFrame) -> DataFrame:
     return fact.join(F.broadcast(label_map), "stream_id", "inner")
 
 
-def label_case_column(labels: dict[str, list[int]]):
-    """Pure-expression variant (no join): F.when chain over stream_id.
-
-    Useful when the label list is small enough to inline into codegen;
-    mirrors _generate_label_case (libnntsc/dbselect.py:615-630).
-    """
-    col = None
-    for label, sids in labels.items():
-        cond = F.col("stream_id").isin([int(s) for s in sids])
-        col = F.when(cond, F.lit(label)) if col is None else col.when(cond, F.lit(label))
-    if col is None:
-        return F.lit(None).cast("string")
-    return col
-
-
 def labels_where_sql(labels: dict[str, list[int]]) -> str:
-    """Oracle-SQL helpers: CASE expression + membership predicate.
+    """Oracle-SQL helper: the CASE expression that tags each row's label.
 
     Label names are client-provided strings interpolated into SQL string
     literals — single quotes are doubled (the SQL escape) so a label like
@@ -75,8 +60,3 @@ def labels_where_sql(labels: dict[str, list[int]]) -> str:
         for label, sids in labels.items()
     )
     return f"CASE {whens} END"
-
-
-def labels_in_sql(labels: dict[str, list[int]]) -> str:
-    all_ids = sorted({int(s) for sids in labels.values() for s in sids})
-    return f"stream_id IN ({', '.join(map(str, all_ids))})"

@@ -24,6 +24,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..scratch import scratch_persist
+
 
 def sessionize(
     fact: DataFrame,
@@ -175,8 +177,6 @@ def funnel_counts(
 
     Output: (step, step_name, n_users), one row per step, in step order.
     """
-    from ..pipeline.dedup import scratch_persist
-
     outs = []
     cur = None  # (key, _t = step-k completion ts, _t1 = step-1 ts)
     for i, s in enumerate(steps):

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..scratch import scratch_persist
+
 
 def asof_join(
     left: DataFrame,
@@ -652,8 +654,6 @@ def seasonal_decompose(
             F.count(value_col).over(w_full) == period,
             F.avg(value_col).over(w_full),
         )
-    from ..pipeline.dedup import scratch_persist
-
     df = fact.withColumn(
         "_phase", (F.row_number().over(w_ord) - 1) % period
     ).withColumn(

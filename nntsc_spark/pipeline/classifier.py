@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..scratch import scratch_persist
+
 
 def nb_train(
     docs: DataFrame,
@@ -69,8 +71,6 @@ def nb_train(
         )
         .where((F.col("cpos") + F.col("cneg")) >= float(min_df))
     )
-    from .dedup import scratch_persist
-
     counts = scratch_persist(counts)
     tot = counts.agg(
         F.sum("cpos").alias("np"),

@@ -37,6 +37,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..scratch import scratch_persist
 from .dedup import md5_long
 
 #: terminal punctuation accepted by the C4 "ends like a sentence" rule
@@ -197,8 +198,6 @@ def clean_lines(
         # COUNTED (one job over the already-needed aggregation), and
         # broadcast only when the measured size is genuinely
         # driver-safe; past the gate it degrades to the shuffle join.
-        from .dedup import scratch_persist
-
         common = common_line_keys(lines, max_count).select("line_key")
         if defer_gate:
             side = common  # lazy: AQE picks the strategy at run time

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..scratch import scratch_checkpoint, scratch_persist
 from .dedup import dedup_clusters, ngram_decontaminate
 from .text import (
     PII_PATTERNS,
@@ -124,7 +125,6 @@ def training_corpus(
     )
     if embeddings is None:
         return out
-    from .dedup import scratch_persist
     from .similarity import centroid_rows, curate_embeddings, resolve_nlist
 
     # the text pipeline output feeds TWO consumers (the embedding-side
@@ -273,8 +273,6 @@ def corpus_split_audit(
     from .dedup import (
         leakage_safe_split,
         minhash_near_duplicates,
-        scratch_checkpoint,
-        scratch_persist,
         split_leakage_report,
     )
 

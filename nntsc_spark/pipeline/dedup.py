@@ -16,176 +16,16 @@ Scale design (100 TB corpus):
 
 from __future__ import annotations
 
-from collections import OrderedDict
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..scratch import reset_scratch  # noqa: F401  (perfbench imports it here)
+from ..scratch import scratch_persist, seam_lookup, seam_put
 from .text import tokens_expr
 
 #: md5 prefix length in hex chars -> 60-bit non-negative bigint
 HASH_HEX_LEN = 15
 SIMHASH_BITS = 60
-
-
-# ---------------------------------------------------------------------------
-# Scratch-cache pool
-# ---------------------------------------------------------------------------
-
-#: semanticHash -> persisted DataFrame handle (insertion order = LRU order)
-_CACHE_POOL: OrderedDict[int, DataFrame] = OrderedDict()
-#: 16, not 8: the deepest registered composition (training_corpus with
-#: embeddings + corpus_split_audit on top) registers ~11 distinct
-#: intermediates in one call — at cap 8 its own early stages (the text
-#: capstone's shingle/band tables and `out`) were evicted before the
-#: final action consumed them, forcing recompute inside a single query
-#: run (guide §5: cache only helps if it survives until the reuse).
-#: Still a hard bound on cache footprint; entries are spill-to-disk.
-_CACHE_POOL_CAP = 16
-
-
-def scratch_persist(df: DataFrame, level=None) -> DataFrame:
-    """Persist a pipeline intermediate with a BOUNDED lifetime.
-
-    Spark's CacheManager serves cached data to any semantically-equal plan,
-    so re-running the same pipeline (a bench rep, a user retry) hits the
-    warm cache without any plumbing.  What Spark does NOT do is release
-    entries: a bare ``.persist()`` with no ``.unpersist()`` leaks blocks for
-    the session lifetime (the r4 advice finding).  This pool keeps the last
-    ``_CACHE_POOL_CAP`` distinct intermediates alive and unpersists the
-    least-recently-used beyond that — warm re-runs, hard cap on cache
-    footprint, no reliance on GC timing.  (A per-result ``weakref.finalize``
-    was tried first and dropped: refcount-triggered unpersist fires the
-    moment a composite operator's intermediate goes out of scope, forcing
-    every re-run cold.)
-    """
-    from pyspark import StorageLevel
-
-    df = df.persist(level or StorageLevel.MEMORY_AND_DISK)
-    try:
-        h = df._jdf.queryExecution().analyzed().semanticHash()
-    except Exception:
-        # plan not hashable (e.g. Spark Connect: no _jdf) — register under
-        # a unique key so the LRU cap still bounds the cache footprint;
-        # only semantic-equality REUSE is lost, not the eviction guarantee
-        # (the early-return form leaked every intermediate on that path)
-        import uuid as _uuid
-
-        h = ("nohash", _uuid.uuid4().hex)
-    _CACHE_POOL[h] = df
-    _CACHE_POOL.move_to_end(h)
-    while len(_CACHE_POOL) > _CACHE_POOL_CAP:
-        _, old = _CACHE_POOL.popitem(last=False)
-        try:
-            old.unpersist()
-        except Exception:
-            pass
-    return df
-
-
-#: (tag, semanticHash, extras) -> [(analyzed plan, result DataFrame)] —
-#: eager-seam memo (insertion order = LRU order).  scratch_persist above
-#: covers LAZY intermediates: Spark's CacheManager serves the persisted
-#: blocks to any semantically-equal plan, so a re-constructed pipeline
-#: hits the warm cache with no plumbing.  EAGER seams get no such help:
-#: a ``localCheckpoint`` materializes into a fresh RDD on every call, and
-#: an iterative fixpoint (connected_components) runs its per-round jobs
-#: at CONSTRUCTION time — so re-building the same composition re-paid the
-#: checkpoint pass and every Pregel round, and (worse) every plan built
-#: DOWNSTREAM of the fresh checkpoint was rooted at a new RDD id, which
-#: made it semantically UNEQUAL to the previous construction's plans and
-#: defeated the CacheManager for the whole rest of the pipeline
-#: (measured: warm `curated_split_audit` re-ran its banding + both CC
-#: loops every rep, 17.5 s warm vs 18.9 s cold at sf0.1).  This memo is
-#: the CacheManager contract extended to eager seams: bucket by
-#: ``semanticHash``, confirm with an exact ``sameResult`` plan
-#: comparison (no hash-collision exposure), serve the ALREADY
-#: materialized result.  Session-scoped and LRU-bounded like the scratch
-#: pool; every first computation still runs from the parquet inputs.
-_SEAM_MEMO: OrderedDict[tuple, list] = OrderedDict()
-_SEAM_MEMO_CAP = 16
-_SEAM_MEMO_CTX = None  # owning SparkContext (same guard as expr_cached)
-
-
-def _seam_memo_lookup(tag: str, df: DataFrame, extras: tuple = ()):
-    """Return (key, analyzed_plan, memoized_result_or_None).
-
-    ``key``/``analyzed_plan`` are opaque tokens for :func:`_seam_memo_put`;
-    both are None when the plan is not introspectable (Spark Connect).
-    """
-    global _SEAM_MEMO_CTX
-    try:
-        # a restarted session must never be served a DataFrame bound to
-        # a stopped context: the memo lives exactly as long as the
-        # SparkContext that materialized its entries
-        sc = df.sparkSession.sparkContext
-        if sc is not _SEAM_MEMO_CTX:
-            _SEAM_MEMO.clear()
-            _SEAM_MEMO_CTX = sc
-        plan = df._jdf.queryExecution().analyzed()
-        key = (tag, plan.semanticHash(), *extras)
-    except Exception:
-        return None, None, None
-    bucket = _SEAM_MEMO.get(key)
-    if bucket:
-        for old_plan, out in bucket:
-            if old_plan.sameResult(plan):
-                _SEAM_MEMO.move_to_end(key)
-                return key, plan, out
-    return key, plan, None
-
-
-def _seam_memo_put(key, plan, out: DataFrame) -> None:
-    if key is None:
-        return
-    _SEAM_MEMO.setdefault(key, []).append((plan, out))
-    _SEAM_MEMO.move_to_end(key)
-    while len(_SEAM_MEMO) > _SEAM_MEMO_CAP:
-        _SEAM_MEMO.popitem(last=False)
-
-
-def scratch_checkpoint(df: DataFrame) -> DataFrame:
-    """Eager ``localCheckpoint`` with the scratch pool's reuse contract:
-    one materialization per distinct (semantically-equal) input plan per
-    session.  Re-constructions get the SAME checkpointed DataFrame back,
-    so their downstream plans stay semantically equal to the previous
-    construction's and keep hitting the scratch-persist caches."""
-    key, plan, hit = _seam_memo_lookup("ckpt", df)
-    if hit is not None:
-        return hit
-    out = df.localCheckpoint()
-    _seam_memo_put(key, plan, out)
-    return out
-
-
-def reset_scratch() -> None:
-    """Release every session-scoped cache this module owns.
-
-    The scratch pool and the seam memo exist so that ONE query's
-    re-constructions (warm bench reps, composed capstones sharing a
-    sub-pipeline) reuse work inside a session.  Shared across QUERIES they
-    make a measurement unattributable: a later query's first rep either
-    rides an earlier query's cache (reads too fast) or pays its eviction
-    churn (reads too slow) — the r15 verdict's item 1.  Measurement
-    harnesses call this between queries so every rep-1 wall is the query's
-    own cold cost; streaming maintainers that mutate a parquet path a
-    memoized seam was built over can call it to drop the stale
-    materializations (the memo itself cannot see the append — it compares
-    PLANS, and a re-read of the same path is plan-equal).
-
-    Persisted blocks are unpersisted; checkpoint blocks are released by the
-    ContextCleaner once the memo drops the last reference (Dataset.unpersist
-    does not free localCheckpoint RDDs — see connected_components).
-    """
-    global _SEAM_MEMO_CTX
-    while _CACHE_POOL:
-        _, df = _CACHE_POOL.popitem(last=False)
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _SEAM_MEMO.clear()
-    _SEAM_MEMO_CTX = None
 
 
 def md5_long(col: Column) -> Column:
@@ -608,8 +448,8 @@ def connected_components(
     edges = pairs.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     )
-    # Fixpoint memo (see _SEAM_MEMO): the whole loop below runs eagerly at
-    # construction time, outside the CacheManager's reach — re-building
+    # Fixpoint memo (see scratch.seam_lookup): the whole loop below runs
+    # eagerly at construction time, outside the CacheManager's reach — re-building
     # the same composition (a warm bench rep, two capstones sharing one
     # clustering) re-paid every round.  Key on the normalized edge
     # projection; the labels are a pure function of that graph.  The
@@ -617,7 +457,7 @@ def connected_components(
     # memoized localCheckpoint result must not satisfy a caller that
     # asked for reliable storage, and a converged result must not mask
     # the nonconvergence raise a smaller max_iter contracts for.
-    key, plan, hit = _seam_memo_lookup(
+    key, plan, hit = seam_lookup(
         "cc", edges, (checkpoint_dir or "", int(max_iter))
     )
     if hit is not None:
@@ -678,7 +518,7 @@ def connected_components(
         # by convergence in a handful of rounds over a pairs-sized table.
         labels = new_labels
         if improved == 0:
-            _seam_memo_put(key, plan, labels)
+            seam_put(key, plan, labels)
             return labels
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds; "

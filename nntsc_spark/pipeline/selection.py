@@ -36,7 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import md5_long, scratch_persist, token_windows
+from ..scratch import scratch_persist
+from .dedup import md5_long, token_windows
 
 DEFAULT_BUCKETS = 10_000
 

@@ -25,7 +25,7 @@ import logging
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .dedup import md5_long
+from ..scratch import expr_cached, scratch_persist
 
 log = logging.getLogger(__name__)
 
@@ -47,48 +47,6 @@ def local_df_1p(spark: SparkSession, rows: list, schema: str) -> DataFrame:
     return spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), schema
     )
-
-
-#: SQL text -> parsed Column, valid for one SparkContext (see expr_cached)
-_EXPR_CACHE: dict[str, Column] = {}
-_EXPR_CACHE_CTX = None
-_EXPR_CACHE_CAP = 512
-
-
-def expr_cached(sql: str) -> Column:
-    """``F.expr`` with a per-SparkContext memo of the parsed Column.
-
-    The ANN/SemDeDup family inlines its quantizers and codebooks as SQL
-    literal text (the pass must stay a pure projection over the scan), so
-    a single query construction ships and PARSES tens of KB of SQL —
-    measured ~1.3 s of driver time per ``ivfpq_residuals`` construction,
-    paid again on EVERY re-construction of the same plan (every bench
-    rep, every registry query sharing the quantizer).  A parsed Column is
-    an immutable unresolved-expression handle, reusable across any number
-    of plans in the same JVM, so memoizing by SQL text removes the
-    re-parse without changing a single plan node (optimization guide
-    §1.2: per-task/driver work, after the algorithm is right).
-
-    The memo is keyed to the active SparkContext: a new context (test
-    harnesses stop/start them) invalidates every cached JVM handle, so
-    the whole dict is dropped when the context object changes.  Bounded
-    at ``_EXPR_CACHE_CAP`` entries (reset wholesale — the strings are
-    re-derivable; an LRU would be ceremony for a cache this cheap).
-    """
-    global _EXPR_CACHE_CTX
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    if sc is not _EXPR_CACHE_CTX:
-        _EXPR_CACHE.clear()
-        _EXPR_CACHE_CTX = sc
-    col = _EXPR_CACHE.get(sql)
-    if col is None:
-        if len(_EXPR_CACHE) >= _EXPR_CACHE_CAP:
-            _EXPR_CACHE.clear()
-        col = F.expr(sql)
-        _EXPR_CACHE[sql] = col
-    return col
 
 
 def dot_expr(a: Column, b: Column) -> Column:
@@ -221,10 +179,10 @@ def brute_force_topk(
 
 def plane_weights(plane: int, dims: int) -> list[float]:
     """Hyperplane ``plane``'s weights in [-1, 1]^dims, derived from
-    md5(plane:dim) — the exact values :func:`hyperplane_expr`'s JVM md5
-    path constant-folds to (and what the DuckDB oracles replay).  Deriving
-    them driver-side keeps plan construction at O(tables) py4j calls
-    instead of O(tables*bits*dims) Column allocations."""
+    md5(plane:dim) — the same values as :func:`.dedup.md5_long` (and what
+    the DuckDB oracles replay).  Deriving them driver-side keeps plan
+    construction at O(tables) py4j calls instead of O(tables*bits*dims)
+    Column allocations."""
     return [
         (int(hashlib.md5(f"{plane}:{d}".encode()).hexdigest()[:15], 16)
          % 2001 - 1000)
@@ -253,31 +211,6 @@ def signature_sql(vec_col: str, table: int, bits: int, dims: int) -> str:
         )
         terms.append(f"(CASE WHEN {dot} > 0 THEN {1 << p}L ELSE 0L END)")
     return " + ".join(terms)
-
-
-def hyperplane_expr(vec: Column, plane: int, dims: int) -> Column:
-    """Sign bit of <vec, h_plane> with h derived from md5(plane:dim) — a
-    deterministic pseudo-random hyperplane in [-1, 1]^dims, identical on any
-    engine that can md5."""
-    weights = F.array(
-        *[
-            (
-                (md5_long(F.lit(f"{plane}:{d}")) % 2001 - 1000) / F.lit(1000.0)
-            ).alias(f"w{d}")
-            for d in range(dims)
-        ]
-    )
-    return (dot_expr(vec, weights) > 0).cast("int")
-
-
-def lsh_signature(vec: Column, bits: int, dims: int) -> Column:
-    """B-bit bucket id from B hyperplane sign bits."""
-    sig = F.lit(0).cast("long")
-    for p in range(bits):
-        sig = sig + F.shiftleft(
-            hyperplane_expr(vec, p, dims).cast("long"), p
-        )
-    return sig
 
 
 def lsh_topk(
@@ -671,8 +604,6 @@ def resolve_nlist(
     twice."""
     if nlist is not None:
         return int(nlist)
-    from .dedup import scratch_persist
-
     emb = scratch_persist(emb)
     n = emb.count()
     resolved = max(8, n // int(target_cell_size))
@@ -952,21 +883,6 @@ def unrolled_dot_sql(
     )
 
 
-def _lit_dot_sqls(vec_sql: str, lits: list[float]) -> tuple[str, str]:
-    """(unrolled, fold) straight-line dot of a column ref against an
-    inlined literal vector — the lambda is ``double(x) * y`` with y
-    already a double literal, matching the quantizer folds."""
-    arr = "array(" + ", ".join(f"{x!r}D" for x in lits) + ")"
-    fold = (
-        f"aggregate(zip_with({vec_sql}, {arr}, "
-        f"(x, y) -> double(x) * y), 0D, (acc, x) -> acc + x)"
-    )
-    unrolled = "0D + " + " + ".join(
-        f"(double({vec_sql}[{i}]) * {x!r}D)" for i, x in enumerate(lits)
-    )
-    return unrolled, fold
-
-
 def vnorm_sql(vec_col: str, dims: int | None = None) -> str:
     """L2 norm of the row vector as a left-to-right fold (one per row).
 
@@ -1172,8 +1088,6 @@ def resolve_bits(
     if bits is not None:
         return int(bits)
     import math
-
-    from .dedup import scratch_persist
 
     emb = scratch_persist(emb)
     n = emb.count()
@@ -2333,8 +2247,6 @@ def semantic_dedup(
     # projection re-evaluates per consumer — measured 3x of the
     # dominant stage at nlist-scales-with-N sizing (SCALING.md,
     # semantic_dedup_scaled)
-    from .dedup import scratch_persist
-
     assigned = scratch_persist(assigned)
     if len(cents) >= ARROW_ASSIGN_MIN_NLIST:
         # large-nlist path: the pair VERIFY dominates end-to-end cost at

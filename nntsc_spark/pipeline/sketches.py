@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..scratch import scratch_persist
 from .dedup import md5_long
 
 
@@ -155,8 +156,6 @@ def cms_heavy_hitters(
     from .text import tokens_expr
 
     toks = docs.select(F.explode(tokens_expr(text_col)).alias("tok"))
-    from .dedup import scratch_persist
-
     counts = scratch_persist(
         toks.groupBy("tok").agg(F.count(F.lit(1)).alias("exact_cnt"))
     )

@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..scratch import scratch_persist
+
 #: small deterministic stopword list used for quality/language scoring
 STOPWORDS = ["the", "a", "of", "and", "to", "in", "is"]
 
@@ -555,8 +557,6 @@ def unigram_logprob_scores(docs: DataFrame, text_col: str = "text") -> DataFrame
 
     Output: (doc_id, n_tokens, avg_logprob DOUBLE rounded 4).
     """
-    from .dedup import scratch_persist
-
     toks = docs.select(
         "doc_id", F.explode(tokens_expr(text_col)).alias("tok")
     )
@@ -762,8 +762,6 @@ def bigram_logprob_scores(
         F.col("_b.w1").alias("w1"),
         F.col("_b.w2").alias("w2"),
     )
-    from .dedup import scratch_persist
-
     doc_big = scratch_persist(
         doc_big.groupBy(key_col, "_is_train", "w1", "w2").agg(
             F.count(F.lit(1)).alias("cnt")

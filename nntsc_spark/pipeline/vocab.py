@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..scratch import scratch_persist
 from .text import tokens_expr
 
 #: end-of-word marker appended to each word's final symbol before
@@ -67,8 +68,6 @@ def source_divergence(
 
     Output: (source, n_tokens, vocab_size, kl_vs_corpus, js_vs_corpus).
     """
-    from .dedup import scratch_persist
-
     sw = scratch_persist(
         docs.select(
             F.col(source_col).alias("source"),
@@ -400,8 +399,6 @@ def textrank_keywords(
     exactly once to build the edges.  Undirected edges mean no dangling
     mass.  Output: (token, rank) top-``topk``, rank desc / token asc.
     """
-    from .dedup import scratch_persist
-
     edges = token_cooccurrence_edges(docs, text_col)
     wdeg = edges.groupBy("src").agg(F.sum("w").alias("wd"))
     norm = scratch_persist(

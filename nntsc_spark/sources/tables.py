@@ -15,6 +15,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..scratch import plan_memo
+
 TABLE_NAMES = [
     "region",
     "nation",
@@ -31,42 +33,33 @@ TABLE_NAMES = [
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-# Analyzed-plan memo: repeated loads of the same table otherwise re-read
-# parquet footers and re-infer the schema on every query (a driver-side
-# metadata RPC per call — measurable across a 49-query bench, pure waste on
-# a 1000-executor cluster where the catalog should serve the schema once).
-# Only the *logical plan* is cached, never data.
-_LOAD_MEMO: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    df = _LOAD_MEMO.get(key)
-    if df is None:
-        try:
-            df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        except Exception as exc:  # pragma: no cover - legacy nanos layout
-            # Older testdata stored events.ts as TIMESTAMP(NANOS), which
-            # Spark rejects unless surfaced as raw longs.  Retry with the
-            # legacy conf only when the read actually failed on it, so the
-            # conf never leaks into sessions reading micros data.
-            if "nanos" not in str(exc).lower():
-                raise
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        _LOAD_MEMO[key] = df
-    return df
+    """The table's parquet scan, read once per session: repeated loads
+    would otherwise re-read parquet footers and re-infer the schema on
+    every query.  Only the *logical plan* is memoized, never data."""
+    return plan_memo(("load", sf_dir, name), lambda: _read(spark, sf_dir, name))
+
+
+def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    try:
+        return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    except Exception as exc:  # pragma: no cover - legacy nanos layout
+        # Older testdata stored events.ts as TIMESTAMP(NANOS), which
+        # Spark rejects unless surfaced as raw longs.  Retry with the
+        # legacy conf only when the read actually failed on it, so the
+        # conf never leaks into sessions reading micros data.
+        if "nanos" not in str(exc).lower():
+            raise
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 #: Wall-clock zero for TIMESTAMP_NTZ arithmetic; NTZ-vs-NTZ diffs are pure
 #: field arithmetic, so the derived epoch is independent of the session tz.
 _NTZ_EPOCH = "TIMESTAMP_NTZ '1970-01-01 00:00:00'"
 
-#: integer-ts unit probe memo: (appId, sf_dir) -> per-second multiplier
-_UNIT_MEMO: dict[tuple[str, str], int] = {}
 
-
-def _long_ts_unit(spark: SparkSession, sf_dir: str, df: DataFrame) -> int:
+def _ts_unit(df: DataFrame) -> int:
     """Per-second multiplier for an integer ``ts`` column, by magnitude.
 
     A long ts has historically meant nanoseconds here, but the unit is a
@@ -77,15 +70,11 @@ def _long_ts_unit(spark: SparkSession, sf_dir: str, df: DataFrame) -> int:
     plausible data.  An empty table defaults to nanos (nothing to scan
     either way).
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    unit = _UNIT_MEMO.get(key)
-    if unit is None:
-        row = df.select("ts").where(F.col("ts").isNotNull()).limit(1).collect()
-        v = abs(row[0]["ts"]) if row else 10**18
-        for unit in (1, 10**3, 10**6, 10**9):
-            if v < unit * 100_000_000_000:  # < year ~5138 in this unit
-                break
-        _UNIT_MEMO[key] = unit
+    row = df.select("ts").where(F.col("ts").isNotNull()).limit(1).collect()
+    v = abs(row[0]["ts"]) if row else 10**18
+    for unit in (1, 10**3, 10**6, 10**9):
+        if v < unit * 100_000_000_000:  # < year ~5138 in this unit
+            break
     return unit
 
 
@@ -120,7 +109,7 @@ def events_fact(
     df = load_table(spark, sf_dir, "events")
     ts_type = dict(df.dtypes)["ts"]
     if ts_type == "bigint":  # integer layout (nanos historically; probed)
-        unit = _long_ts_unit(spark, sf_dir, df)
+        unit = plan_memo(("ts_unit", sf_dir), lambda: _ts_unit(df))
         if start is not None:
             df = df.where(F.col("ts") >= int(start) * unit)
         if stop is not None:

@@ -108,7 +108,9 @@ class CollectionIngestor:
         streams = upsert_streams(
             existing, data.select(*self.unique_cols), self.unique_cols
         )
-        # cache the (tiny) dimension before two downstream uses
+        # cache the (tiny) dimension for its uses below; it is released after
+        # the last one, since a stream never ends and an epoch's cache that
+        # outlives the epoch is a leak
         streams = streams.cache()
         # materialize ONCE: fact feeds the write, the stats merge, and the
         # live export — uncached, each action would recompute the
@@ -138,6 +140,7 @@ class CollectionIngestor:
                 ).toLocalIterator()
             ]
             self.exporter.announce_streams(self.collection, new_rows)
+        streams.unpersist()
         if self.stats_path:
             self._update_stats(fact)
         if self.exporter is not None and self.collection:
@@ -206,6 +209,7 @@ class CollectionIngestor:
         merged = merged.cache()
         merged.count()
         write_dimension(merged, self.stats_path)
+        merged.unpersist()
 
     def read_fact(self) -> DataFrame:
         return read_fact(self.spark, self.fact_path)

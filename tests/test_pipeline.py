@@ -156,7 +156,7 @@ def test_scratch_checkpoint_memoizes_equal_plans(spark):
     checkpointed DataFrame (downstream plans stay cache-compatible
     across re-constructions); different inputs get distinct
     materializations with the right rows."""
-    from nntsc_spark.pipeline.dedup import scratch_checkpoint
+    from nntsc_spark.scratch import scratch_checkpoint
 
     d1 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, t string")
     c1 = scratch_checkpoint(d1.select("id", "t"))
@@ -172,31 +172,48 @@ def test_reset_scratch_clears_memo_and_pool(spark):
     """reset_scratch (the r16 bench's between-query hook) empties the seam
     memo and the scratch pool: a post-reset re-construction computes fresh
     (new object, same rows), and the pool holds no persisted handles."""
+    from nntsc_spark import scratch
     from nntsc_spark.pipeline import dedup as dd
 
     base = spark.createDataFrame([(1, 2), (2, 3)], "d1 long, d2 long")
     cc1 = dd.connected_components(base.where("d1 >= 1"))
-    ck1 = dd.scratch_checkpoint(base.select("d1"))
-    dd.scratch_persist(base.select("d2"))
-    assert dd._SEAM_MEMO and dd._CACHE_POOL
+    ck1 = scratch.scratch_checkpoint(base.select("d1"))
+    scratch.scratch_persist(base.select("d2"))
+    assert scratch._seams and scratch._pool
     dd.reset_scratch()
-    assert not dd._SEAM_MEMO and not dd._CACHE_POOL
+    assert not scratch._seams and not scratch._pool
     cc2 = dd.connected_components(base.where("d1 >= 1"))
     assert cc2 is not cc1  # recomputed, not served from the cleared memo
     assert {r.node: r.label for r in cc2.collect()} == {1: 1, 2: 1, 3: 1}
-    assert dd.scratch_checkpoint(base.select("d1")) is not ck1
+    assert scratch.scratch_checkpoint(base.select("d1")) is not ck1
+
+
+def test_reset_scratch_keeps_plan_only_memos(spark, sf_dir):
+    """reset_scratch releases the pool and the seam memo and nothing else:
+    parsed expressions and table loads hold no data and stay valid for
+    the session, so a harness resetting between queries does not re-pay
+    SQL parsing or parquet footer reads."""
+    from nntsc_spark import scratch
+
+    base = spark.range(4)
+    scratch.scratch_persist(base.selectExpr("id * 2 AS x"))
+    scratch.scratch_checkpoint(base.selectExpr("id * 3 AS y"))
+    col = scratch.expr_cached("id + 1")
+    docs = load_table(spark, sf_dir, "documents")
+    scratch.reset_scratch()
+    assert not scratch._pool and not scratch._seams
+    assert scratch.expr_cached("id + 1") is col
+    assert load_table(spark, sf_dir, "documents") is docs
 
 
 def test_reset_scratch_invalidates_memo_after_parquet_append(spark, tmp_path):
-    """The r15 verdict's staleness hazard, pinned: a parquet path APPENDED
-    within one session re-reads as a plan `sameResult`-equal to the
-    pre-append read, so a memoized seam consumer (connected_components
-    here) serves the PRE-append materialization — the same hazard class
-    Spark's own CacheManager has for persist().  reset_scratch() is the
-    maintainers' invalidation hook: after it, the consumer recomputes
-    from storage and sees the appended data.  If Spark ever starts
-    distinguishing the re-read (first assertion fails), the hook becomes
-    unnecessary for this case and the memo comment should be updated."""
+    """A parquet path APPENDED within one session re-reads as a plan
+    `sameResult`-equal to the pre-append read, but over more files.  The
+    seam memo keys on the plan's input files too, so a memoized consumer
+    (connected_components here) recomputes and sees the appended data
+    without any reset, while a re-read of an unchanged path still hits.
+    reset_scratch() stays the explicit hook: after it the consumer
+    recomputes again, with the same answer."""
     import nntsc_spark.pipeline.dedup as dd
 
     p = str(tmp_path / "edges.parquet")
@@ -205,15 +222,16 @@ def test_reset_scratch_invalidates_memo_after_parquet_append(spark, tmp_path):
     ).parquet(p)
     cc1 = dd.connected_components(spark.read.parquet(p))
     assert sorted(r.node for r in cc1.collect()) == [1, 2]
+    assert dd.connected_components(spark.read.parquet(p)) is cc1
     spark.createDataFrame([(10, 11)], "d1 long, d2 long").write.mode(
         "append"
     ).parquet(p)
-    # documented hazard: the re-read is plan-equal, the memo serves stale
-    stale = dd.connected_components(spark.read.parquet(p))
-    assert stale is cc1
-    # the hook: drop the memo, recompute, see the appended component
+    seen = dd.connected_components(spark.read.parquet(p))
+    assert seen is not cc1
+    assert sorted(r.node for r in seen.collect()) == [1, 2, 10, 11]
     dd.reset_scratch()
     fresh = dd.connected_components(spark.read.parquet(p))
+    assert fresh is not seen
     assert sorted(r.node for r in fresh.collect()) == [1, 2, 10, 11]
 
 
@@ -3177,7 +3195,7 @@ def test_semantic_dedup_arrow_pair_stage_matches_join(spark, sf_dir):
     # semantic_dedup with nlist below the gate is impossible at 64, so
     # reconstruct the join result from the arrow pair stage's inputs.
     from nntsc_spark.pipeline.similarity import _assign_cells_arrow
-    from nntsc_spark.pipeline.dedup import scratch_persist
+    from nntsc_spark.scratch import scratch_persist
 
     cents = centroid_rows(emb, nlist)
     assigned = _assign_cells_arrow(emb, cents, "vec_id", "embedding")

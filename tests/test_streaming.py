@@ -863,6 +863,73 @@ def test_live_export_oversized_batch_guard(spark, tmp_path):
     assert read_fact(spark, str(tmp_path / "fact")).count() == 13
 
 
+def _persistent_rdds(spark, at_most: int | None = None) -> int:
+    """``getPersistentRDDs().size()`` once the ContextCleaner has caught up.
+
+    A localCheckpoint's blocks go only after the JVM collects its RDD, so
+    this GCs and polls: until the count is ``at_most`` or less, or, with
+    no bound, until two reads agree; it gives up after about 10 s.  The
+    map a read returns holds every RDD it lists, and py4j releases a
+    dropped handle on a 1 s tick, so each GC waits that tick out."""
+    import gc
+    import time
+
+    prev = None
+    for _ in range(8):
+        gc.collect()
+        time.sleep(1.1)
+        spark._jvm.System.gc()
+        time.sleep(0.2)
+        n = spark.sparkContext._jsc.getPersistentRDDs().size()
+        if (n <= at_most) if at_most is not None else (n == prev):
+            break
+        prev = n
+    return n
+
+
+def test_process_batch_leaves_no_cached_state_per_epoch(spark, tmp_path):
+    """A stream never ends, so an epoch may not leave cached data behind:
+    with stats and a live exporter wired (every cache in process_batch),
+    repeated batches keep Spark's CacheManager empty and the persistent
+    RDD count flat, the one addition being the returned fact's checkpoint
+    that the caller still holds."""
+    from nntsc_spark.scratch import reset_scratch
+
+    class Exporter:
+        def announce_streams(self, collection, rows):
+            pass
+
+        def publish_live(self, collection, sid, rows):
+            pass
+
+        def push_marker(self, collection, ts):
+            pass
+
+    ing = CollectionIngestor(
+        spark,
+        process_icmp,
+        UNIQUE_COLS,
+        fact_path=str(tmp_path / "fact"),
+        streams_path=str(tmp_path / "streams"),
+        stats_path=str(tmp_path / "stats"),
+        collection="amp-icmp",
+        exporter=Exporter(),
+    )
+    reset_scratch()
+    spark.catalog.clearCache()
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    before = _persistent_rdds(spark)
+    for i in range(3):
+        raw = spark.createDataFrame(
+            _raw_rows(1_000_000 + 600 * i, 5, f"t{i % 2}"), ICMP_RAW_SCHEMA
+        )
+        fact = ing.process_batch(raw, batch_id=i)
+        assert cache_manager.isEmpty(), f"batch {i} left a cached plan"
+        assert _persistent_rdds(spark, before + 1) <= before + 1, f"batch {i}"
+    assert fact.count() == 5
+    assert ing.read_fact().count() == 15
+
+
 def test_streaming_fact_write_retry_is_idempotent(spark, tmp_path):
     """T4 under retry: reprocessing the SAME batch id overwrites the
     batch's own (date, ingest_batch) partitions instead of appending the
